@@ -358,7 +358,12 @@ def verify_candidates_jaccard(
 ) -> DataFrame:
     """Exact-Jaccard verification of LSH candidates — the verify step of
     the standard candidate/verify split; only O(candidates) set
-    intersections instead of O(n^2)."""
+    intersections instead of O(n^2).
+
+    Columns of ``candidates`` beyond ``id_a``/``id_b`` (e.g. a probe-side
+    tag) ride through to the verified rows, between the ids and
+    ``jaccard``."""
+    extra = [c for c in candidates.columns if c not in ("id_a", "id_b")]
     sh = docs.select(F.col(id_col).alias("__vid"), F.col(shingles_col).alias("__sh"))
     a = sh.select(F.col("__vid").alias("id_a"), F.col("__sh").alias("__sh_a"))
     b = sh.select(F.col("__vid").alias("id_b"), F.col("__sh").alias("__sh_b"))
@@ -373,6 +378,7 @@ def verify_candidates_jaccard(
         .select(
             "id_a",
             "id_b",
+            *extra,
             inter.alias("__i"),
             (F.size("__sh_a") + F.size("__sh_b")).alias("__s"),
         )
@@ -382,7 +388,7 @@ def verify_candidates_jaccard(
     return (
         sized.withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .select("id_a", "id_b", *extra, "jaccard")
     )
 
 

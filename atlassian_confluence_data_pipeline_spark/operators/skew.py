@@ -176,6 +176,20 @@ def salted_join_skewed(
 _SPREAD_MEMO: dict[tuple, int] = {}
 
 
+def _has_map(dt) -> bool:
+    """Whether ``dt`` is or contains (through structs and arrays) a
+    MapType, which xxhash64 rejects at analysis time."""
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    if isinstance(dt, MapType):
+        return True
+    if isinstance(dt, ArrayType):
+        return _has_map(dt.elementType)
+    if isinstance(dt, StructType):
+        return any(_has_map(f.dataType) for f in dt.fields)
+    return False
+
+
 def spread_scan(df: DataFrame, min_ratio: int = 2) -> DataFrame:
     """Round-robin repartition of a frame whose PHYSICAL source yields
     fewer splits than the session's parallelism — the input-skew remedy
@@ -229,11 +243,7 @@ def spread_scan(df: DataFrame, min_ratio: int = 2) -> DataFrame:
     # failure re-runs map tasks (SPARK-38388). Hashing the row's own
     # values into 100x more key values than partitions spreads evenly,
     # needs no sort, and re-runs reproduce the same assignment.
-    from pyspark.sql.types import MapType
-
-    hashable = [
-        f.name for f in df.schema.fields if not isinstance(f.dataType, MapType)
-    ]
+    hashable = [f.name for f in df.schema.fields if not _has_map(f.dataType)]
     if not hashable:
         return df.repartition(target)
     key = F.pmod(

@@ -1113,19 +1113,26 @@ def containment_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     are dropped BEFORE the pair join — the guard that keeps the
     fingerprint equi-join linear at corpus scale (without it one viral
     phrase creates a quadratic bucket)."""
-    # Round 12 (the market_basket_lift treatment): ONE fingerprint-keyed
-    # collect_set aggregate both computes each fingerprint's document
-    # frequency (the 2..FP_MAX_DF stop-fingerprint gate = a size filter
-    # on the set) and assembles its posting list; pair candidates are
-    # an in-place combination expression (y > x over the df-bounded
-    # set) and per-doc kept-fingerprint counts explode from the same
-    # staged groups — replacing the former rare-aggregate + broadcast
-    # join + kept checkpoint + fingerprint self-join.
+    # Posting lists are built only for fingerprints that pass the
+    # 2..FP_MAX_DF document-frequency gate, checked first with an O(1)
+    # count buffer per fingerprint and applied as a semi-join: a viral
+    # stop-fingerprint never reaches collect_set, so no aggregation
+    # buffer holds more than FP_MAX_DF ids. Pair candidates are an
+    # in-place combination expression (y > x over the df-bounded set)
+    # and per-doc kept-fingerprint counts explode from the same staged
+    # groups.
     fps = winnowing_fingerprints(spark, sf_dir)
-    groups = (
+    rare = (
         fps.groupBy("fingerprint")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df").between(2, FP_MAX_DF))
+        .select("fingerprint")
+    )
+    groups = (
+        fps.join(rare, "fingerprint", "left_semi")
+        .groupBy("fingerprint")
         .agg(F.collect_set("doc_id").alias("docs"))
-        .filter((F.size("docs") >= 2) & (F.size("docs") <= FP_MAX_DF))
+        .filter(F.size("docs") >= 2)
         .select("docs")
         .localCheckpoint(eager=True)
     )

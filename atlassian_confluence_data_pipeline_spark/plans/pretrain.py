@@ -329,10 +329,11 @@ def interpolated_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     freq = tok.groupBy("word").agg(F.count(F.lit(1)).alias("cu"))
     # scalar corpus cardinality: one size() fold per document — the same
-    # exact integer the former tok.count() re-explosion produced
-    total = (
-        docs.agg(F.sum(F.size(_words(F.col("text"))))).first()[0]
-    )
+    # exact integer the former tok.count() re-explosion produced. A NULL
+    # text has no tokens (size() would say -1 or NULL), and an empty
+    # table sums to NULL: both count as 0.
+    n_words = F.coalesce(F.size(_words(F.col("text"))), F.lit(0))
+    total = docs.agg(F.sum(F.greatest(n_words, F.lit(0)))).first()[0] or 0
     n = F.greatest(F.size("w") - 1, F.lit(0))
     bgd = w.select(
         "doc_id",

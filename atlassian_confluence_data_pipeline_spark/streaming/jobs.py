@@ -447,11 +447,24 @@ def foreach_batch_curation(
     order is doc_id order — the CDC case, and what the recovery test
     pins (kill mid-stream, restart, ledger == batch ledger).
 
+    Materialization points: each intermediate is computed once per
+    micro-batch. (a) The batch-unique docs with their features (gate,
+    fingerprint, batch-local keep-min, shingle hashes) and (b) their
+    band rows (one MinHash fold per doc) are eager local checkpoints;
+    the probe, the verify step, the ledger MERGE input and both index
+    partitions read them. (c) The verified pairs are checkpointed too,
+    each carrying the id of its prior-side doc (NULL when both docs are
+    in this batch), so the rejection rule reads off the pairs with no
+    re-join against the indexes. Per-job scheduling overhead dominates
+    at small batch sizes; with compaction after every trigger a batch
+    costs about 21 Spark jobs (the pre-materialization form cost 40).
+
     Scale notes: every stage is an equi-join on a derived key
     (fingerprint / band_key); index writes are per-batch partitions and
     the ledger MERGE collapses replays, so no store grows on recovery;
     pair emission is at-least-once (dedup-on-read), the same contract
     as foreach_batch_minhash_dedup."""
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from atlassian_confluence_data_pipeline_spark.functions.text import (
@@ -464,66 +477,91 @@ def foreach_batch_curation(
         verify_candidates_jaccard,
     )
 
+    seen_schema = "doc_id bigint, fp string"
+    index_schema = "doc_id bigint, hs array<bigint>, band_key bigint"
+
     def curate_batch(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        words = F.split(F.trim(F.col("text")), r"\s+")
-        gated = (
+        # materialization 1 — per-doc features of the batch-unique docs:
+        # gate, sha2 fingerprint, batch-local keep-min-doc_id per
+        # fingerprint, shingle hashes. Everything below reads this once
+        # instead of re-running the gate/fingerprint/shingle chain per
+        # consumer.
+        uniq = (
             batch_df.select(
                 "doc_id",
                 "text",
-                F.size(words).cast("int").alias("n_words"),
+                F.split(F.trim(F.col("text")), r"\s+").alias("__w"),
                 F.sha2(F.col("text"), 256).alias("fp"),
             )
+            .withColumn("n_words", F.size("__w").cast("int"))
             .filter(F.col("n_words") >= gate_min_words)
+            .withColumn(
+                "__first", F.min("doc_id").over(Window.partitionBy("fp"))
+            )
+            .filter(F.col("doc_id") == F.col("__first"))
+            .select(
+                "doc_id",
+                "text",
+                "n_words",
+                "fp",
+                shingle_hashes_from_word_hashes(
+                    F.transform(F.col("__w"), rolling_hash)
+                ).alias("hs"),
+            )
             .localCheckpoint(eager=True)
         )
-        # exact dedup: batch-local keep-min-doc_id per fingerprint, then
-        # drop fingerprints seen in any earlier batch
-        firsts = gated.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-        batch_unique = gated.join(firsts, ["fp", "doc_id"])
-        prior_seen = seen_store.read(spark, "doc_id bigint, fp string")
-        fresh = batch_unique.join(
-            prior_seen.select("fp"), "fp", "left_anti"
-        ).localCheckpoint(eager=True)
-        # near-dup: band the BATCH-unique docs (not just the fresh ones)
-        # so the store partitions written below are pure functions of the
-        # batch contents — a replayed batch reproduces them identically
-        # no matter what state exists, which is what makes recovery safe
-        # at ANY crash point (an exact-dup twin has identical bands to
-        # its original, so acceptance decisions are unchanged)
-        hs_tbl = batch_unique.select(
-            "doc_id",
-            F.transform(words, rolling_hash).alias("wh"),
-        ).select(
-            "doc_id", shingle_hashes_from_word_hashes(F.col("wh")).alias("hs")
-        ).filter(F.size("hs") > 0)
-        banded = hs_tbl.select(
-            "doc_id",
-            "hs",
-            minhash_signature(F.col("hs"), k=32, pre_hashed=True).alias(
-                "__sig"
-            ),
-        ).select(
-            "doc_id",
-            "hs",
-            F.explode(F.array(*lsh_band_keys(F.col("__sig"), 16, 2))).alias(
-                "band_key"
-            ),
+        # materialization 2 — the band rows of EVERY batch-unique doc
+        # (not just the fresh ones), so the index partition written
+        # below is a pure function of the batch contents: a replayed
+        # batch reproduces it identically no matter what state exists,
+        # which is what makes recovery safe at ANY crash point (an
+        # exact-dup twin has identical bands to its original, so
+        # acceptance decisions are unchanged). The MinHash fold runs
+        # once per doc.
+        banded = (
+            uniq.filter(F.size("hs") > 0)
+            .select(
+                "doc_id",
+                "hs",
+                minhash_signature(F.col("hs"), k=32, pre_hashed=True).alias(
+                    "__sig"
+                ),
+            )
+            .select(
+                "doc_id",
+                "hs",
+                F.explode(
+                    F.array(*lsh_band_keys(F.col("__sig"), 16, 2))
+                ).alias("band_key"),
+            )
+            .localCheckpoint(eager=True)
         )
-        prior_idx = index_store.read(
-            spark, "doc_id bigint, hs array<bigint>, band_key bigint"
+        # exact dedup: drop fingerprints seen in any earlier batch
+        fresh = uniq.join(
+            seen_store.read(spark, seen_schema).select("fp"), "fp", "left_anti"
         )
-        universe = prior_idx.unionByName(banded).localCheckpoint(eager=True)
+        # near-dup probe against (earlier batches ∪ this batch), each
+        # universe row tagged with its side: a candidate carries the id
+        # of its prior-side doc (NULL when both docs are in this batch)
+        universe = (
+            index_store.read(spark, index_schema)
+            .withColumn("__prior", F.lit(True))
+            .unionByName(banded.withColumn("__prior", F.lit(False)))
+        )
         cand = (
             banded.select(F.col("doc_id").alias("id_x"), "band_key")
             .join(
-                universe.select(F.col("doc_id").alias("id_y"), "band_key"),
+                universe.select(
+                    F.col("doc_id").alias("id_y"), "band_key", "__prior"
+                ),
                 "band_key",
             )
             .filter(F.col("id_x") != F.col("id_y"))
             .select(
                 F.least("id_x", "id_y").alias("id_a"),
                 F.greatest("id_x", "id_y").alias("id_b"),
+                F.when(F.col("__prior"), F.col("id_y")).alias("prior_id"),
             )
             .distinct()
         )
@@ -532,32 +570,23 @@ def foreach_batch_curation(
             verify_candidates_jaccard(
                 cand, shingles, "doc_id", "hs", threshold=jaccard
             )
-            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+            .select(
+                "id_a",
+                "id_b",
+                "prior_id",
+                F.round("jaccard", 6).alias("jaccard"),
+            )
             .localCheckpoint(eager=True)
         )
-        verified.write.mode("append").parquet(pairs_out_dir)
-        # rejection: a fresh doc near-dupping an earlier-seen doc (either
-        # pair side) or a lower-id doc in its own batch (always id_b)
-        fresh_ids = fresh.select("doc_id")
-        prior_ids = prior_idx.select("doc_id").distinct()
-        rej_vs_prior = (
-            verified.join(
-                prior_ids.withColumnRenamed("doc_id", "id_a"), "id_a"
-            ).select(F.col("id_b").alias("doc_id"))
-        ).unionByName(
-            verified.join(
-                prior_ids.withColumnRenamed("doc_id", "id_b"), "id_b"
-            ).select(F.col("id_a").alias("doc_id"))
+        verified.drop("prior_id").write.mode("append").parquet(pairs_out_dir)
+        # rejection, read off the tags: a doc near-dupping an earlier-seen
+        # doc (the pair's non-prior side) or a lower-id doc in its own
+        # batch (id_b of an untagged pair); only fresh docs can be accepted
+        rejected = verified.select(
+            F.when(F.col("prior_id") == F.col("id_b"), F.col("id_a"))
+            .otherwise(F.col("id_b"))
+            .alias("doc_id")
         )
-        batch_ids = batch_unique.select("doc_id")
-        rej_in_batch = (
-            verified.join(
-                batch_ids.withColumnRenamed("doc_id", "id_a"), "id_a"
-            )
-            .join(fresh_ids.withColumnRenamed("doc_id", "id_b"), "id_b")
-            .select(F.col("id_b").alias("doc_id"))
-        )
-        rejected = rej_vs_prior.unionByName(rej_in_batch).distinct()
         accepted = fresh.join(rejected, "doc_id", "left_anti")
         if on_accepted is not None:
             # sink composition hook (incremental shard maintenance):
@@ -565,9 +594,8 @@ def foreach_batch_curation(
             # replay recomputes the identical accepted frame (state for
             # this batch not yet visible) and the hook's own commit
             # protocol (batch-keyed dirs + manifest flip) dedups it
-            on_accepted(
-                accepted.localCheckpoint(eager=True), int(batch_id)
-            )
+            accepted = accepted.localCheckpoint(eager=True)
+            on_accepted(accepted, int(batch_id))
         # ledger MERGE: content-derived fields only -> byte-identical
         # across chop points and replays
         ledger_store.upsert(
@@ -586,17 +614,11 @@ def foreach_batch_curation(
         # O(batch) state writes AFTER the idempotent ledger MERGE: each
         # partition is a pure function of the batch, so a replay (any
         # crash point) overwrites it with identical rows
-        seen_store.write_batch(batch_unique.select("doc_id", "fp"), batch_id)
+        seen_store.write_batch(uniq.select("doc_id", "fp"), batch_id)
         index_store.write_batch(banded, batch_id)
         if compact_every and (int(batch_id) + 1) % compact_every == 0:
-            seen_store.compact(
-                spark, "doc_id bigint, fp string", keep_recent=compact_every
-            )
-            index_store.compact(
-                spark,
-                "doc_id bigint, hs array<bigint>, band_key bigint",
-                keep_recent=compact_every,
-            )
+            seen_store.compact(spark, seen_schema, keep_recent=compact_every)
+            index_store.compact(spark, index_schema, keep_recent=compact_every)
 
     return docs.writeStream.foreachBatch(curate_batch)
 

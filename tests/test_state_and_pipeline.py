@@ -149,3 +149,34 @@ def test_state_store_time_travel_and_vacuum(spark, tmp_path):
     removed = store.vacuum(keep=1)
     assert len(removed) == 2 and snap1 in removed
     assert store.read(spark).count() == 6  # current snapshot untouched
+
+
+def test_publish_after_vacuum_reads_materialized_output(spark, tmp_path):
+    """run_with_store's ``processed`` is materialized once: vacuuming
+    the previous ledger snapshot before publishing it through the HTML
+    sink must not fail (a lazy ``processed`` re-reads that snapshot),
+    and the published pages are exactly the ledger's update rows."""
+    import os
+
+    from atlassian_confluence_data_pipeline_spark.sources.html_sink import register
+
+    register(spark)
+    store = StateStore(str(tmp_path / "ledger"))
+    store.write(make_state(spark))
+    before = {r["id"]: r["version"] for r in store.read(spark).collect()}
+    result = run_with_store(spark, make_pages(spark), store, CUTOFF)
+    assert len(store.vacuum(keep=1)) == 1  # the snapshot `state` was read from
+
+    out = str(tmp_path / "html")
+    result.processed.write.format("confluence_html").mode("overwrite").options(
+        filename_col="filename", content_col="html"
+    ).save(out)
+    with open(os.path.join(out, "_MANIFEST")) as fh:
+        published = set(fh.read().splitlines())
+
+    after = {r["id"]: r["version"] for r in store.read(spark).collect()}
+    updates = {(k, v) for k, v in after.items() if before.get(k) != v}
+    rows = result.processed.select("id", "version", "filename").collect()
+    assert {(r["id"], r["version"]) for r in rows} == updates
+    assert published == {r["filename"] for r in rows}
+    assert len(published) == len(updates) == 5

@@ -4,6 +4,7 @@ kill-and-restart recovery and single-batch equivalence pinned."""
 
 from __future__ import annotations
 
+import random
 import uuid
 
 from atlassian_confluence_data_pipeline_spark.operators.state import (
@@ -31,6 +32,11 @@ BATCHES = [
 def _run_stream(spark, tmp_path, tag, files, checkpoint=None, compact_every=None):
     """Run the curation job availableNow over the files currently in
     the drop dir; returns the three stores."""
+    return _run_query(spark, tmp_path, tag, files, checkpoint, compact_every)[1]
+
+
+def _run_query(spark, tmp_path, tag, files, checkpoint=None, compact_every=None):
+    """:func:`_run_stream`, also returning the finished query."""
     drop = tmp_path / f"drop_{tag}"
     drop.mkdir(exist_ok=True)
     for i, rows in files:
@@ -61,7 +67,7 @@ def _run_stream(spark, tmp_path, tag, files, checkpoint=None, compact_every=None
         .start()
     )
     q.awaitTermination(300)
-    return stores
+    return q, stores
 
 
 def _ledger_rows(spark, store):
@@ -166,3 +172,85 @@ def test_streaming_curation_with_compaction_equals_batch(spark, tmp_path):
     assert _ledger_rows(spark, stores[0]) == compacted_ledger
     assert stores[1].read(spark, SEEN).count() == seen_before
     assert stores[2].read(spark, IDX).count() == idx_before
+
+
+def _planted_batches(seed: int = 11, n_batches: int = 3, n_orig: int = 8):
+    """Seeded drops with planted duplicates, in doc_id arrival order.
+    Every batch holds ``n_orig`` random 40-60-word originals (10k-token
+    vocabulary, so they share almost no shingles), one gated doc, and an
+    exact and a near copy of an original from the SAME batch; every later
+    batch adds an exact and a near copy of an original from an EARLIER
+    batch. A near copy swaps one word near the end (shingle Jaccard
+    >= 0.85). Returns (batches, exact ids, near ids, gated ids, the
+    planted near pairs)."""
+    rng = random.Random(seed)
+
+    def words(lo, hi):
+        return [f"t{rng.randrange(10_000)}" for _ in range(rng.randint(lo, hi))]
+
+    texts: dict[int, str] = {}
+    batches, exact, near, gated, near_pairs = [], set(), set(), set(), set()
+    doc_id = 0
+    for b in range(n_batches):
+        rows, batch_orig = [], []
+
+        def add(text):
+            nonlocal doc_id
+            doc_id += 1
+            rows.append((doc_id, text))
+            return doc_id
+
+        earlier = sorted(texts)
+        for _ in range(n_orig):
+            i = add(" ".join(words(40, 60)))
+            texts[i] = rows[-1][1]
+            batch_orig.append(i)
+        gated.add(add(" ".join(words(1, 4))))
+        sources = [rng.choice(batch_orig)] + ([rng.choice(earlier)] if earlier else [])
+        for src in sources:
+            exact.add(add(texts[src]))
+            w = texts[src].split()
+            w[len(w) - rng.randint(2, 5)] = f"edit{doc_id}"
+            near_pairs.add((src, add(" ".join(w))))
+            near.add(doc_id)
+        batches.append(rows)
+    return batches, exact, near, gated, near_pairs
+
+
+def test_streaming_curation_rejects_planted_duplicates(spark, tmp_path):
+    """Three seeded drops with exact and near copies planted inside a
+    batch and across batches, plus gated docs: no planted copy is
+    accepted, every original is, each planted near pair is verified, and
+    the ledger equals the single-batch run of the same rows."""
+    batches, exact, near, gated, near_pairs = _planted_batches()
+    files = [(i + 1, b) for i, b in enumerate(batches)]
+    stores = _run_stream(spark, tmp_path, "p", files, compact_every=1)
+    ledger = _ledger_rows(spark, stores[0])
+
+    all_ids = {r[0] for b in batches for r in b}
+    assert {int(r[0]) for r in ledger} == all_ids - exact - near - gated
+    pairs = {
+        (r["id_a"], r["id_b"])
+        for r in spark.read.parquet(str(tmp_path / "pairs_p")).collect()
+    }
+    assert near_pairs <= pairs
+
+    one = _run_stream(spark, tmp_path, "p1", [(1, [r for b in batches for r in b])])
+    assert ledger == _ledger_rows(spark, one[0])
+
+
+#: Spark jobs one curation micro-batch may issue. The job materializes
+#: the batch's features and band rows once and reads them everywhere;
+#: re-deriving them per consumer (gate, fingerprint, MinHash, index
+#: re-reads) costs about 40 jobs per batch.
+MAX_JOBS_PER_BATCH = 28
+
+
+def test_streaming_curation_jobs_per_batch_ceiling(spark, tmp_path):
+    batches = _planted_batches()[0]
+    files = [(i + 1, b) for i, b in enumerate(batches)]
+    q, _ = _run_query(spark, tmp_path, "j", files, compact_every=1)
+    n_batches = len(q.recentProgress)
+    assert n_batches == len(batches)
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) / n_batches <= MAX_JOBS_PER_BATCH
